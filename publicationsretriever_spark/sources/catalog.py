@@ -1,17 +1,20 @@
-"""Snapshot-versioned table catalog — Iceberg-style semantics on local
-parquet.
+"""Round stores: one snapshot per crawl round, written through a single
+``write_round`` / ``finish_commit`` contract.
 
-Every crawl round commits ONE snapshot: immutable table data files plus
-a JSON manifest carrying the parent pointer and per-partition lineage
-(frontier offsets, seen-set cardinality, fetch/error counters) — the
-north rule's "checkpointed Iceberg snapshot with per-partition lineage
-so the job resumes exactly from any round".
+Every crawl round commits ONE snapshot: its tables plus a manifest
+carrying the parent pointer and per-partition lineage (frontier
+offsets, seen-set cardinality, fetch/error counters) — the north rule's
+"checkpointed snapshot with per-partition lineage so the job resumes
+exactly from any round".
 
-Real Apache Iceberg needs its runtime jars (not in this image); the
-catalog detects them and uses Iceberg tables when available
-(``iceberg_available()``), otherwise this parquet+manifest
-implementation provides the same commit/resume contract. The engine
-code is identical either way.
+- ``SnapshotCatalog`` keeps the snapshots as immutable parquet data
+  files and a JSON manifest per snapshot (Iceberg-style commit/resume
+  semantics on local parquet; no Iceberg runtime is used).
+- ``MemoryCatalog`` keeps them as eager local checkpoints in executor
+  memory — the crawl's store when no catalog is given (no resume).
+
+Both share ``RoundStore.write_round``'s scheduler and differ only in the
+per-table write, the read of a part list and the publish step.
 """
 
 from __future__ import annotations
@@ -20,29 +23,135 @@ import json
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime is on the classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:  # noqa: BLE001
-        return False
+def _paths(meta: dict) -> list[str]:
+    """A table's part list (manifests before multi-part tables carried a
+    single ``path``)."""
+    return meta.get("paths", [meta["path"]] if "path" in meta else [])
 
 
-class SnapshotCatalog:
+class RoundStore:
+    """The round-commit contract. A table's meta lists its parts under
+    ``"paths"``: a delta table gains one part per round, so the union of
+    its parts is the cumulative table; a full table is one part.
+
+    Subclasses supply ``_write_part`` (materialize one table, return its
+    part id, row count and read-back), ``read`` (a part list as one
+    DataFrame) and ``_publish`` (make a manifest the latest snapshot)."""
+
+    _head: dict | None = None
+
+    def latest(self) -> dict | None:
+        return self._head
+
+    def write_round(
+        self,
+        spark: SparkSession,
+        deltas: dict[str, DataFrame],
+        fulls: dict[str, DataFrame],
+        prior: dict[str, DataFrame] | None = None,
+        warm_first: str | tuple[str, ...] | None = None,
+        compact: bool = False,
+    ) -> tuple[str, dict, dict[str, DataFrame]]:
+        """Phase 1: materialize a round's tables. Returns (snap_id,
+        table_meta, loaded): ``loaded`` holds every table's read-back,
+        the cumulative view for a delta table. The snapshot is INVISIBLE
+        until ``finish_commit`` publishes it — an interrupted job leaves
+        no half-commit.
+
+        ``deltas`` tables write ONLY this round's rows and their meta
+        carries the parent's parts plus the new one, so commit I/O is
+        O(round delta). ``fulls`` tables are small dimensions rewritten
+        whole. With ``compact=True`` each delta table's cumulative
+        content (``prior`` union delta) is written as ONE part instead,
+        bounding the part fan-in.
+
+        The ``warm_first`` tables are written concurrently first: the
+        lazy caches they compute are read by the other tables, and cold
+        concurrent jobs would each recompute them. The rest then run in
+        one pool, so the close costs max-of-tables, not sum-of-tables.
+        Each table's meta records its write wall (``write_s``)."""
+        head = self.latest()
+        parent_tables = head["tables"] if head else {}
+        snap_no = int(head["snapshot_id"].rsplit("-", 1)[1]) + 1 if head else 0
+        snap_id = f"snap-{snap_no:05d}"
+        prior = prior or {}
+
+        def write_one(name: str, df: DataFrame) -> tuple[dict, DataFrame]:
+            t0 = time.time()
+            parent = parent_tables.get(name, {})
+            is_delta = name in deltas
+            if is_delta and compact:
+                # a prior view the caller did not carry (a catalog
+                # written before the table existed) falls back to the
+                # parent's parts — compaction must never drop history
+                base = prior.get(name)
+                if base is None and _paths(parent):
+                    base = self.read(spark, _paths(parent))
+                if base is not None:
+                    df = base.unionByName(df)
+            path, n, back = self._write_part(spark, f"{snap_id}/{name}", df)
+            meta = {"paths": [path], "rows": n}
+            if is_delta and not compact:
+                meta = {
+                    "paths": _paths(parent) + [path],
+                    "rows": parent.get("rows", 0) + n,
+                    "delta_rows": n,
+                }
+                back = self.read(spark, meta["paths"])
+            elif is_delta:
+                meta["delta_rows"] = n - parent.get("rows", 0)
+            meta["write_s"] = round(time.time() - t0, 3)
+            return meta, back
+
+        if isinstance(warm_first, str):
+            warm_first = (warm_first,)
+        items = {**deltas, **fulls}
+        warm = [n for n in items if n in (warm_first or ())]
+        written: dict[str, tuple[dict, DataFrame]] = {}
+        for batch in (warm, [n for n in items if n not in warm]):
+            if batch:
+                with ThreadPoolExecutor(max_workers=len(batch)) as pool:
+                    futs = {n: pool.submit(write_one, n, items[n]) for n in batch}
+                    written.update((n, f.result()) for n, f in futs.items())
+        table_meta = {n: meta for n, (meta, _) in written.items()}
+        loaded = {n: back for n, (_, back) in written.items()}
+        return snap_id, table_meta, loaded
+
+    def finish_commit(
+        self, snap_id: str, table_meta: dict, round_no: int, lineage: dict
+    ) -> str:
+        """Phase 2: publish the snapshot as the latest one."""
+        parent = self.latest()
+        manifest = {
+            "snapshot_id": snap_id,
+            "parent": parent["snapshot_id"] if parent else None,
+            "round": round_no,
+            "committed_at": time.time(),
+            "tables": table_meta,
+            "lineage": lineage,
+        }
+        self._publish(manifest)
+        self._head = manifest
+        return snap_id
+
+
+class SnapshotCatalog(RoundStore):
     """commit() appends an immutable snapshot; load() restores any
-    snapshot's tables; resume = load(latest)."""
+    snapshot's tables; resume = load(latest). The latest manifest is
+    kept once read or committed, so a crawl parses the manifests (each
+    embeds the whole round lineage) at most once."""
 
     def __init__(self, root: str):
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
+        self._scanned = False
 
     # -- manifest helpers ---------------------------------------------------
 
@@ -68,11 +177,13 @@ class SnapshotCatalog:
                 # atomic rename existed) must not poison every future
                 # load/resume — treat it as an uncommitted snapshot
                 continue
+        self._head, self._scanned = (out[-1] if out else None), True
         return out
 
     def latest(self) -> dict | None:
-        snaps = self.snapshots()
-        return snaps[-1] if snaps else None
+        if not self._scanned:
+            self.snapshots()
+        return self._head
 
     # -- commit / load --------------------------------------------------------
 
@@ -82,121 +193,32 @@ class SnapshotCatalog:
         tables: dict[str, DataFrame],
         warm_first: str | None = None,
     ) -> tuple[str, dict, dict[str, DataFrame]]:
-        """Phase 1: materialize every table as immutable data files.
-        Returns (snap_id, table_meta, read-back DataFrames). Row counts
-        come from the written parquet (footer metadata — no plan
-        recompute). The snapshot is INVISIBLE until ``finish_commit``
-        writes the manifest — an interrupted job leaves no half-commit
-        (same atomicity contract as an Iceberg metadata swap).
-
-        Delegates to :meth:`write_round` with no deltas — ONE
-        write_one/warm_first/thread-pool implementation for both
-        commit paths (they had drifted into near-verbatim copies;
-        the meta entry carries "paths" now, which every reader
-        already handles via the paths-or-path fallback)."""
+        """:meth:`write_round` with no deltas: every table is written
+        whole. Row counts come from the written parquet (footer
+        metadata — no plan recompute)."""
         return self.write_round(
             spark, deltas={}, fulls=tables, warm_first=warm_first
         )
 
-    def finish_commit(
-        self, snap_id: str, table_meta: dict, round_no: int, lineage: dict
-    ) -> str:
-        """Phase 2: publish the snapshot (manifest = the atomic swap)."""
-        parent = self.latest()
-        manifest = {
-            "snapshot_id": snap_id,
-            "parent": parent["snapshot_id"] if parent else None,
-            "round": round_no,
-            "committed_at": time.time(),
-            "tables": table_meta,
-            "lineage": lineage,
-        }
+    def _write_part(
+        self, spark: SparkSession, key: str, df: DataFrame
+    ) -> tuple[str, int, DataFrame]:
+        path = str(self.root / key)
+        df.write.mode("overwrite").parquet(path)
+        back = spark.read.parquet(path)
+        return path, back.count(), back  # parquet footer count
+
+    def read(self, spark: SparkSession, paths: list[str]) -> DataFrame:
+        return spark.read.parquet(*paths)
+
+    def _publish(self, manifest: dict) -> None:
         # two-phase publish: write to a temp file, then atomic rename —
         # a crash mid-write can never leave a truncated manifest behind
         # (the Iceberg metadata-swap atomicity contract)
-        final = self.root / snap_id / "manifest.json"
+        final = self.root / manifest["snapshot_id"] / "manifest.json"
         tmp = final.with_suffix(".json.tmp")
         tmp.write_text(json.dumps(manifest, indent=2))
         os.replace(tmp, final)
-        return snap_id
-
-    def write_round(
-        self,
-        spark: SparkSession,
-        deltas: dict[str, DataFrame],
-        fulls: dict[str, DataFrame],
-        prior: dict[str, DataFrame] | None = None,
-        warm_first: str | None = None,
-        compact: bool = False,
-    ) -> tuple[str, dict, dict[str, DataFrame]]:
-        """Iceberg-append-style commit: ``deltas`` tables write ONLY this
-        round's rows — the manifest entry carries the parent's data-file
-        paths plus the new one, so commit I/O is O(round delta) while
-        ``load``/read-back sees the full table (a union of immutable
-        parts). ``fulls`` tables are small dimensions rewritten whole.
-
-        With ``compact=True`` each delta table's cumulative content
-        (``prior`` union delta) is rewritten as ONE part instead —
-        bounding the manifest's path fan-in (the MERGE-compaction the
-        round loop triggers every ``compact_every`` rounds).
-        """
-        snap_id = f"snap-{len(self.snapshots()):05d}"
-        snap_dir = self.root / snap_id
-        parent = self.latest()
-        parent_tables = parent["tables"] if parent else {}
-
-        def parent_paths(name: str) -> list[str]:
-            meta = parent_tables.get(name)
-            if not meta:
-                return []
-            return meta.get("paths", [meta["path"]] if "path" in meta else [])
-
-        def parent_rows(name: str) -> int:
-            meta = parent_tables.get(name)
-            return meta.get("rows", 0) if meta else 0
-
-        def write_one(item):
-            name, df = item
-            is_delta = name in deltas
-            if is_delta and compact and prior is not None:
-                # a prior view the caller didn't carry (e.g. resuming a
-                # catalog written before the table existed) falls back
-                # to the parent snapshot's data files — compaction must
-                # never drop history just because the in-memory state
-                # lost the handle
-                p = prior.get(name)
-                if p is None and parent_paths(name):
-                    p = spark.read.parquet(*parent_paths(name))
-                if p is not None:
-                    df = p.unionByName(df)
-            path = snap_dir / name
-            df.write.mode("overwrite").parquet(str(path))
-            back = spark.read.parquet(str(path))
-            n = back.count()  # parquet footer metadata — no plan recompute
-            if is_delta and not compact:
-                paths = parent_paths(name) + [str(path)]
-                meta = {
-                    "paths": paths,
-                    "rows": parent_rows(name) + n,
-                    "delta_rows": n,
-                }
-                return name, meta, spark.read.parquet(*paths)
-            meta = {"paths": [str(path)], "rows": n}
-            if is_delta:
-                meta["delta_rows"] = n - (parent_rows(name) if compact else 0)
-            return name, meta, back
-
-        items = {**deltas, **fulls}
-        written = []
-        rest = dict(items)
-        if warm_first is not None and warm_first in rest:
-            written.append(write_one((warm_first, rest.pop(warm_first))))
-        if rest:
-            with ThreadPoolExecutor(max_workers=max(1, len(rest))) as pool:
-                written.extend(pool.map(write_one, rest.items()))
-        table_meta = {n: meta for n, meta, _ in written}
-        loaded = {n: back for n, _, back in written}
-        return snap_id, table_meta, loaded
 
     def commit(
         self,
@@ -220,9 +242,7 @@ class SnapshotCatalog:
             else next(s for s in snaps if s["snapshot_id"] == snapshot_id)
         )
         tables = {
-            name: spark.read.parquet(
-                *(meta["paths"] if "paths" in meta else [meta["path"]])
-            )
+            name: self.read(spark, _paths(meta))
             for name, meta in manifest["tables"].items()
         }
         return manifest, tables
@@ -326,3 +346,31 @@ class SnapshotCatalog:
             delta_keys.filter(F.col("change") == "removed"), old
         )
         return added_changed.unionByName(removed)
+
+
+class MemoryCatalog(RoundStore):
+    """The round contract in executor memory: a part is a table observed
+    for its row count and eagerly local-checkpointed, keyed by
+    ``snap-N/table``. A delta table's parts are the checkpoints of the
+    rounds since its last compaction; publishing a snapshot drops the
+    parts it no longer lists. Nothing is durable (no ``load``)."""
+
+    def __init__(self):
+        self._parts: dict[str, DataFrame] = {}
+
+    def _write_part(
+        self, spark: SparkSession, key: str, df: DataFrame
+    ) -> tuple[str, int, DataFrame]:
+        rows = Observation()
+        part = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
+        self._parts[key] = part
+        return key, int(rows.get["n"]), part
+
+    def read(self, spark: SparkSession, paths: list[str]) -> DataFrame:
+        return reduce(DataFrame.unionByName, (self._parts[p] for p in paths))
+
+    def _publish(self, manifest: dict) -> None:
+        live = {p for meta in manifest["tables"].values() for p in meta["paths"]}
+        self._parts = {p: df for p, df in self._parts.items() if p in live}

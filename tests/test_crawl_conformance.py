@@ -13,6 +13,7 @@ from publicationsretriever_spark.crawl.oracle import (
     crawl_oracle,
 )
 from publicationsretriever_spark.plans.rounds import CrawlEngine
+from publicationsretriever_spark.sources.catalog import SnapshotCatalog
 from publicationsretriever_spark.sources.synthetic_web import SyntheticWeb
 
 
@@ -216,29 +217,58 @@ def test_handle_net_500_remap_keyed_on_erroring_connection(crawl_setup):
     assert orows == {"hdlin::0001": "http_404", "hdlout::0001": "http_500"}
 
 
-def test_observation_delta_counts_and_phase_ledger(crawl_setup):
-    """Round-5 fixed-cost path: delta cardinalities ride the round-close
-    checkpoints as Observations (CollectMetrics) instead of dedicated
-    count jobs — so the numbers in metrics must equal what a real count
-    of the materialized state says, and every round must carry the
-    always-on driver-phase ledger the scaling bench reads."""
-    _web, state, _oracle = crawl_setup
-    # per-round results deltas (observed during results_ckpt) sum to the
-    # in-crawl result rows; round == -1 is the post-crawl J4 pool flush,
-    # emitted AFTER the last round's observation by design
+@pytest.fixture(scope="module")
+def catalog_crawl(spark, crawl_setup, tmp_path_factory):
+    """The crawl_setup crawl, committed to a SnapshotCatalog."""
+    web, _state, _oracle = crawl_setup
+    cat = SnapshotCatalog(str(tmp_path_factory.mktemp("conformance-cat")))
+    engine = CrawlEngine(spark, web, num_buckets=8, host_quota=50, record_order=True)
+    return engine.crawl(web.seeds_df(spark), max_rounds=3, catalog=cat)
+
+
+@pytest.mark.parametrize("store", ["memory", "catalog"])
+def test_observation_delta_counts_and_phase_ledger(request, crawl_setup, store):
+    """Both round stores close a round through the same sequence: the
+    delta cardinalities come from the writes (Observations in memory,
+    parquet footers in the catalog) instead of dedicated count jobs, so
+    the numbers in metrics must equal what a real count of the
+    materialized state says; both stores must match the oracle and each
+    other round by round, and carry the same driver-phase ledger."""
+    _web, memory_state, oracle = crawl_setup
+    state = (
+        memory_state if store == "memory"
+        else request.getfixturevalue("catalog_crawl")
+    )
+    assert sorted(
+        (r["id"], r["sourceUrl"], r["docOrDatasetUrl"], r["round"])
+        for r in state.results.collect()
+    ) == sorted(
+        (r["id"], r["sourceUrl"], r["docOrDatasetUrl"], r["round"])
+        for r in oracle.results
+    )
+    assert set(r[0] for r in state.seen.collect()) == oracle.seen
+    # per-round results deltas sum to the in-crawl result rows; round
+    # == -1 is the post-crawl J4 pool flush, emitted AFTER the last
+    # round's count by design
     in_crawl = state.results.filter(F.col("round") >= 0).count()
     assert sum(m["results"] for m in state.metrics) == in_crawl
     # seen deltas accumulate to the exact seen-set cardinality
     assert state.metrics[-1]["seen_total"] == state.seen.count()
-    # the frontier observation counted the NEXT frontier as it was cut
+    # the frontier count is the NEXT frontier as it was written
     assert state.metrics[-1]["frontier_next"] == state.frontier.count()
+    counts = ("results", "seen_total", "frontier_next")
+    assert [[m[k] for k in counts] for m in state.metrics] == [
+        [m[k] for k in counts] for m in memory_state.metrics
+    ]
     for m in state.metrics:
         phases = m.get("driver_phases")
         assert phases is not None and "construct" in phases
         assert phases["construct"] >= 0
-        # close-phase walls exist for the in-memory (non-catalog) path
         assert "pooled_ckpt" in phases and "sketch" in phases
         assert isinstance(phases.get("cut_parts"), dict)
+    assert [set(m["driver_phases"]) for m in state.metrics] == [
+        set(m["driver_phases"]) for m in memory_state.metrics
+    ]
 
 
 def test_mixed_priority_quota_rejected_seed_and_noncanonical_redirect(spark):

@@ -337,16 +337,10 @@ def main() -> None:
     def _phase_sum(p: dict | None) -> float | None:
         if not p:
             return None
+        # the close writes overlap in two pools — their per-table walls
+        # would double-count; the pool walls are the driver-time spent
         tot = p.get("construct", 0.0)
-        if "warmup_pool" in p:
-            # the results/domain_counts/path_counts cuts overlap in a
-            # pool — their per-member walls would double-count; the
-            # pool wall is the driver-time actually spent
-            keys = ("warmup_pool", "pooled_ckpt", "compact", "sketch")
-        else:
-            keys = ("results_ckpt", "ckpt_domain_counts",
-                    "ckpt_path_counts", "pooled_ckpt", "compact", "sketch")
-        for k in keys:
+        for k in ("warmup_pool", "pooled_ckpt", "sketch"):
             tot += p.get(k) or 0.0
         return round(tot, 3)
 
